@@ -60,7 +60,8 @@ def main():
             "batch_eval_python": sum(o == "BatchEvalPython" for o in ops),
             "arrow_stages": sum(
                 o in ("ArrowEvalPython", "FlatMapGroupsInPandas",
-                      "MapInPandas", "FlatMapGroupsInPandasWithState")
+                      "MapInPandas", "MapInArrow",
+                      "FlatMapGroupsInPandasWithState")
                 for o in ops),
             "scans": sum(o == "Scan" for o in ops),
             "exchanges": sum(o == "Exchange" for o in ops),

@@ -94,9 +94,11 @@ class TestDecodeInfo:
         # exist — neither may alter the schema)
         from pyspark.sql import functions as F
 
-        info = decode_info(audio_df, carry=["transcript", "ok", "nope"])
+        info = decode_info(audio_df,
+                           carry=["transcript", "ok", "nope", "transcript"])
         assert info.columns[-1] == "transcript"
         assert info.columns.count("ok") == 1
+        assert info.columns.count("transcript") == 1
         joined = (
             info.select("clip_id", F.col("transcript").alias("got"))
             .join(audio_df.select("clip_id", "transcript"), "clip_id")
@@ -161,6 +163,38 @@ class TestAudioSuite:
         rows = vd.collect()
         assert {r["partition_id"] for r in rows} <= {"0", "1", "2", "3", "__global__"}
         assert all(r["n_violations"] > 0 for r in rows)
+
+    def test_partition_column_name_is_metamorphic(self, spark, audio_df,
+                                                  manifest_df):
+        # renaming the partition column (part_id → shard, named through
+        # partition_col) must leave every violation row unchanged,
+        # partition attribution included: decode-side rules read the
+        # partition column from the context, not a hard-coded name
+        from datatest_spark.audio import speech_ratio, transcript_rate
+
+        def stream(df, part):
+            res = validate_audio_table(
+                df, manifest=manifest_df, check_snr=True,
+                partition_col=part,
+                extra_rules=[transcript_rate(), speech_ratio(1.01)])
+            rows = sorted(res.violations.collect(), key=repr)
+            res.unpersist()
+            return [tuple(r) for r in rows]
+
+        base = stream(audio_df, "part_id")
+        renamed = stream(audio_df.withColumnRenamed("part_id", "shard"),
+                         "shard")
+        assert renamed == base
+        # the row-attributable rules all fired and carry a partition id
+        attributed = [r for r in base
+                      if r[0].split(":")[0] in ("audio", "interval",
+                                                "ref_match",
+                                                "transcript_rate",
+                                                "speech_ratio")]
+        assert {r[0].split(":")[0] for r in attributed} == {
+            "audio", "interval", "ref_match", "transcript_rate",
+            "speech_ratio"}
+        assert all(r[8] in {"0", "1", "2", "3"} for r in attributed)
 
 
 class TestAudioFeatures:
@@ -257,7 +291,8 @@ class TestAudioFeatures:
         FX.audio_clips_df(spark, 50, parts=1).write.parquet(src)
         plan = audio_analysis(spark.read.parquet(src)) \
             ._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInPandas") == 1  # one decode stage
+        assert plan.count("MapInArrow") == 1  # one decode stage
+        assert "MapInPandas" not in plan
         assert "Exchange" not in plan
         assert "ReadSchema: struct<clip_id:string,bytes:binary>" in plan
 
@@ -491,7 +526,8 @@ class TestTranscriptRate:
         # the fixture generator itself is one Arrow stage; the rule in
         # declared mode must add NO second Python stage
         base = df._jdf.queryExecution().executedPlan().toString()
-        for marker in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
+        for marker in ("ArrowEvalPython", "MapInPandas", "MapInArrow",
+                       "BatchEvalPython"):
             assert plan.count(marker) <= 2 * base.count(marker), marker
         assert plan_df.filter("rule_id = 'transcript_rate:wps'").count() > 0
 

@@ -204,9 +204,10 @@ class TestVadBpePlans:
         plan = dataset_card(audio_clips_df(spark, 40, parts=2))
         s = plan._jdf.queryExecution().executedPlan().toString()
         # the fixture generator itself is one mapInPandas; the card
-        # adds exactly one more (the decode/flags pass) — no per-row
-        # Python anywhere
-        assert s.count("MapInPandas") == 2
+        # adds exactly one Arrow decode stage (the flags pass) — no
+        # per-row Python anywhere
+        assert s.count("MapInPandas") == 1
+        assert s.count("MapInArrow") == 1
         assert "BatchEvalPython" not in s
 
     def test_bpe_encode_arrow_only(self, spark):
